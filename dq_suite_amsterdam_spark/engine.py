@@ -16,7 +16,9 @@ Pass structure (SURVEY.md §3.1 "Our lifecycle replacement"):
                               codegen'd array (BASELINE.md perf note 9).
                               Heavy-buffer aggregates (percentile, exact
                               distinct, bounded distinct-set) ride a separate
-                              parallel agg pass instead.
+                              parallel agg pass instead. A suite without
+                              predicate rules has no scan to observe: one
+                              plain aggregate carries its observed rules.
   3. per-key groupBy plans -> uniqueness/compound-uniqueness (duplicate keys,
                               map-side partial agg handles skew; AQE on)
   4. anti-join plans       -> referential rules (broadcast small ref sides)
@@ -42,7 +44,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -182,6 +184,38 @@ def _masked_value_col(cr: CompiledRule, mask_columns: list[str] | None):
     return cr.value_col
 
 
+def _capped_per_key(
+    frame: DataFrame,
+    keys: list[str],
+    order: Column,
+    limit: int,
+    n_rows_hint: int | None,
+) -> DataFrame:
+    """At most ``limit`` rows of ``frame`` per ``keys`` partition, the first
+    by ``order``. Two-stage exact cap: a single window partitioned only by
+    ``keys`` would shuffle EVERY row to <= #keys reducers (hot keys at
+    scale). Stage 1 caps each of S salt buckets per key at ``limit``
+    (balanced shuffle), leaving <= S*limit rows per key for the exact
+    stage-2 window. ``n_rows_hint`` (known size of ``frame``) skips stage 1
+    when the frame is too small to need it."""
+    n_salt = 16
+    windows = []
+    if n_rows_hint is None or n_rows_hint > n_salt * limit:
+        salt = F.pmod(
+            F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
+            F.lit(n_salt),
+        )
+        windows.append(Window.partitionBy(*keys, salt).orderBy(order))
+    windows.append(Window.partitionBy(*keys).orderBy(order))
+    for w in windows:
+        frame = (
+            frame.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") <= limit)
+            .drop("__rn")
+        )
+    return frame
+
+
 class ValidationEngine:
     """Compiles and runs one table's rule suite.
 
@@ -232,26 +266,6 @@ class ValidationEngine:
         for c, rid in zip(compiled, ids):
             c.regel_id = rid
 
-        persisted = False
-        n_scans = sum(
-            1 for c in compiled if c.kind in ("predicate", "agg_observed", "groupby_unique", "referential")
-        )
-        if self.settings.persist_input and n_scans > 1:
-            # starved-scan guard (guide §2.5 input skew): a small or
-            # unsplittable input plans into fewer scan tasks than cores,
-            # serializing the fused scan AND every pass that reads the
-            # cache (the persist pins the input's partitioning). Spread by
-            # the unique identifier before persisting; results are
-            # partitioning-independent (aggregates + deterministic
-            # violation-row selection). No-op on healthy inputs.
-            key_cols = [c for c in id_cols if c in df.columns]
-            if key_cols:
-                from .operators.textstats import spread_small_scan
-
-                df = spread_small_scan(df, key_cols)
-            df = df.persist()
-            persisted = True
-
         by_kind: dict[str, list[CompiledRule]] = {}
         for c in compiled:
             by_kind.setdefault(c.kind, []).append(c)
@@ -272,7 +286,6 @@ class ValidationEngine:
         observed_rules = by_kind.get("agg_observed", [])
         observable_rules = [c for c in observed_rules if c.observable]
         distinct_rules = [c for c in observed_rules if not c.observable]
-        fuse = bool(self.settings.fuse_stats_in_violation_scan and predicate_rules)
 
         n_violation_rows = None
         # run-scoped persist registry, passed EXPLICITLY down the call chain
@@ -291,7 +304,7 @@ class ValidationEngine:
         # re-scanning + re-deriving from the wide input (bandwidth, not CPU,
         # is the scaling ceiling on dense hosts — BENCH/BASELINE.md notes).
         narrow_df = None
-        if fuse and (len(distinct_rules) + len(drift_rules)) >= 2:
+        if predicate_rules and (len(distinct_rules) + len(drift_rules)) >= 2:
             narrow_cols = sorted(
                 {
                     c.attribute
@@ -304,7 +317,7 @@ class ValidationEngine:
                 persisted_frames.append(narrow_df)
 
         with ThreadPoolExecutor(max_workers=8) as pool:
-            if fuse:
+            if predicate_rules:
                 # separate tiny aggs only for exact-DISTINCT / heavy-buffer
                 # rules, which can't ride CollectMetrics — ONE JOB PER RULE,
                 # submitted concurrently: a combined agg that mixes a
@@ -318,15 +331,14 @@ class ValidationEngine:
                         pool.submit(
                             self._run_stats_pass,
                             narrow_df if narrow_df is not None else df,
-                            [],
                             [cr],
                         )
                         for cr in distinct_rules
                     ]
             else:
-                stats_fut = pool.submit(
-                    self._run_stats_pass, df, predicate_rules, observed_rules
-                )
+                # no predicate rules, so no violation scan to observe:
+                # one plain aggregate carries every observed rule
+                stats_fut = pool.submit(self._run_stats_pass, df, observed_rules)
             # uniqueness/referential need total_rows only for percentages —
             # the full jobs (aggregation AND shaped violation frames) run on
             # pool threads, overlapping the fused scan; totals fill in after
@@ -370,26 +382,21 @@ class ValidationEngine:
                     self.baseline_store,
                 )
 
-            if fuse:
+            if predicate_rules:
                 # ONE full-width pass: stats aggregates observed on the same
                 # scan that extracts violation rows (df.observe /
                 # CollectMetrics); the violation frame is persisted so the
                 # caller's consumption doesn't rescan the input
-                from pyspark.sql import Observation
-
                 # stable name: Observation() defaults to a fresh UUID, which
                 # varies the plan between runs; a constant name keeps plan
                 # text (and codegen cache keys) identical across repeated
                 # runs of the same suite
                 obs = Observation(f"dq_stats_{rule_set_hash(rd.rules)}")
-                # include_unexpected=False: the expensive predicate sums are
-                # NOT in the observe — per-rule unexpected counts come from
-                # the persisted violation frame below (see _stats_exprs)
+                # the expensive predicate sums are NOT in the observe —
+                # per-rule unexpected counts come from the persisted
+                # violation frame below (see _stats_exprs)
                 observed_df = df.observe(
-                    obs,
-                    *self._stats_exprs(
-                        predicate_rules, observable_rules, include_unexpected=False
-                    ),
+                    obs, *self._stats_exprs(predicate_rules, observable_rules)
                 )
                 # persist + count the PRE-limit violations: the observe node
                 # must deliver before any post-shuffle stage — AQE's
@@ -398,8 +405,7 @@ class ValidationEngine:
                 # data case). The limit/grouping shape then runs on the
                 # already-materialized frame, which is cheap.
                 viol = self._predicate_violations(
-                    observed_df, predicate_rules, id_cols, rd.mask_columns,
-                    apply_shape=False,
+                    observed_df, predicate_rules, id_cols, rd.mask_columns
                 ).persist()
                 persisted_frames.append(viol)
                 _t = time.monotonic()
@@ -444,16 +450,6 @@ class ValidationEngine:
                 stat_results, total_rows = stats_fut.result()
                 phase_t["stats_wait"] = time.monotonic() - _t
                 results += stat_results
-                if predicate_rules:
-                    violation_frames.append(
-                        self._predicate_violations(
-                            df,
-                            predicate_rules,
-                            id_cols,
-                            rd.mask_columns,
-                            persisted_frames=persisted_frames,
-                        )
-                    )
             _t = time.monotonic()
             for cr, fut in uniq_futs:
                 dup_stats = fut.result()
@@ -495,9 +491,6 @@ class ValidationEngine:
         afwijking = self._build_afwijking(violation_frames, observed_failures, run_time)
         phase_t["build_outputs"] = time.monotonic() - _t
 
-        if persisted:
-            persisted_frames.append(df)
-
         failed_rules = [r.compiled.rule for r in results if not r.success]
         wall = time.monotonic() - t0
         metrics = {
@@ -536,17 +529,15 @@ class ValidationEngine:
         self,
         predicate_rules: list[CompiledRule],
         observed_rules: list[CompiledRule],
-        include_unexpected: bool = True,
     ) -> list:
-        """``include_unexpected=False`` is the fused-mode shape: the per-rule
-        unexpected counts are NOT aggregated here — they come from counting
-        the persisted violation frame per regelId. Rationale: df.observe
-        (CollectMetrics) evaluates its aggregate expressions INTERPRETED per
-        row (no whole-stage codegen), so putting ``sum(violation_pred)`` in
-        the observe re-runs every regex/sha predicate a second time ~10x
-        slower than the codegen'd violation array right next to it (measured:
-        84-93s fused scan vs ~55s for both separate passes at 32 cores/16M
-        rows). The remaining observed exprs (count, isNull sums, condition
+        """The per-rule unexpected counts are NOT aggregated here — they
+        come from counting the persisted violation frame per regelId.
+        Rationale: df.observe (CollectMetrics) evaluates its aggregate
+        expressions INTERPRETED per row (no whole-stage codegen), so putting
+        ``sum(violation_pred)`` in the observe re-runs every regex/sha
+        predicate a second time ~10x slower than the codegen'd violation
+        array right next to it (measured: 84-93s fused scan vs ~55s for two
+        separate passes at 32 cores/16M rows). The remaining observed exprs (count, isNull sums, condition
         sums, min/max/mean) are cheap under interpretation."""
         exprs = [F.count(F.lit(1)).alias("__total")]
         # several rules on the SAME column share one missing-count
@@ -556,11 +547,6 @@ class ValidationEngine:
         # rule with the same (attribute, condition)
         miss_idx = self._miss_indices(predicate_rules)
         for i, cr in enumerate(predicate_rules):
-            if include_unexpected:
-                pred = cr.violation_pred
-                if cr.condition is not None:
-                    pred = cr.condition & pred
-                exprs.append(F.sum(pred.cast("long")).alias(f"u_{i}"))
             if cr.condition is not None:
                 exprs.append(F.sum(cr.condition.cast("long")).alias(f"n_{i}"))
             if miss_idx.get(i) == i:
@@ -593,24 +579,23 @@ class ValidationEngine:
         return out
 
     def _run_stats_pass(
-        self,
-        df: DataFrame,
-        predicate_rules: list[CompiledRule],
-        observed_rules: list[CompiledRule],
+        self, df: DataFrame, observed_rules: list[CompiledRule]
     ) -> tuple[list[RuleResult], int]:
-        exprs = self._stats_exprs(predicate_rules, observed_rules)
-        row = df.agg(*exprs).collect()[0].asDict()
-        return self._stats_results_from_row(row, predicate_rules, observed_rules)
+        """Plain aggregate for observed rules that cannot ride the fused
+        scan's observe: heavy-buffer rules, or every observed rule when the
+        suite has no predicate rules."""
+        row = df.agg(*self._stats_exprs([], observed_rules)).collect()[0].asDict()
+        return self._stats_results_from_row(row, [], observed_rules, {})
 
     def _stats_results_from_row(
         self,
         row: dict,
         predicate_rules: list[CompiledRule],
         observed_rules: list[CompiledRule],
-        unexpected_by_rule: dict[str, int] | None = None,
+        unexpected_by_rule: dict[str, int],
     ) -> tuple[list[RuleResult], int]:
-        """``unexpected_by_rule`` (fused mode): regelId -> violation-row count
-        from the persisted violation frame, replacing the u_i aggregates."""
+        """``unexpected_by_rule``: regelId -> violation-row count from the
+        persisted violation frame; a rule absent from it has none."""
         total = int(row["__total"])
 
         miss_idx = self._miss_indices(predicate_rules)
@@ -618,10 +603,7 @@ class ValidationEngine:
         for i, cr in enumerate(predicate_rules):
             # `or 0`: F.sum returns NULL on empty input / all-NULL condition
             element = int(row[f"n_{i}"] or 0) if f"n_{i}" in row else total
-            if unexpected_by_rule is not None:
-                unexpected = int(unexpected_by_rule.get(cr.regel_id, 0))
-            else:
-                unexpected = int(row[f"u_{i}"] or 0)
+            unexpected = int(unexpected_by_rule.get(cr.regel_id, 0))
             missing = int(row.get(f"m_{miss_idx[i]}") or 0) if i in miss_idx else 0
             denom = element - missing
             percent = (unexpected / denom * 100.0) if denom > 0 else None
@@ -654,8 +636,6 @@ class ValidationEngine:
         rules: list[CompiledRule],
         id_cols: list[str],
         mask_columns: list[str] | None,
-        apply_shape: bool = True,
-        persisted_frames: list | None = None,
     ) -> DataFrame:
         """ONE scan emitting (regelId, identifierVeldWaarde,
         afwijkendeAttribuutWaarde) for all predicate rules: per row build an
@@ -699,7 +679,7 @@ class ValidationEngine:
         ids_repr = F.concat(
             F.lit("[["), F.concat_ws(", ", *reprs), F.lit("]]")
         )
-        exploded = (
+        return (
             df.select(
                 *id_aliases,
                 F.array(*entries).alias("__v"),
@@ -718,11 +698,6 @@ class ValidationEngine:
                 *carry,
             )
         )
-        return (
-            self._apply_violation_shape(exploded, persisted_frames=persisted_frames)
-            if apply_shape
-            else exploded
-        )
 
     def _apply_violation_shape(
         self,
@@ -736,7 +711,7 @@ class ValidationEngine:
         reference's one-row-per-unique-deviating-value shape with all ids
         collected, computed distributively.
 
-        ``n_rows_hint``: known total size of ``viol`` (fused mode counts it;
+        ``n_rows_hint``: known total size of ``viol`` (the fused scan counts it;
         uniqueness knows its unexpected count). When the frame is small the
         salting stage is skipped — one window is enough and one shuffle
         cheaper; the two-stage path remains for unbounded violation sets."""
@@ -753,8 +728,6 @@ class ValidationEngine:
             # result) and groups that overflow get an explicit
             # ', ...(+N more)' marker instead of the reference's silent
             # 200-id cliff (README.md:144).
-            from pyspark.sql import Window
-
             limit = settings.violation_limit or GROUPED_DEFAULT_LIMIT
             # struct-wrapped value: null deviating values (e.g. every
             # not-null violation) must group AND join null-safely
@@ -775,24 +748,8 @@ class ValidationEngine:
                     persisted_frames.append(viol_k)
             keys = ["regelId", "__gv"]
             counts = viol_k.groupBy(*keys).agg(F.count(F.lit(1)).alias("__total"))
-            capped = viol_k
-            n_salt = 16
-            if n_rows_hint is None or n_rows_hint > n_salt * limit:
-                salt = F.pmod(
-                    F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
-                    F.lit(n_salt),
-                )
-                w1 = Window.partitionBy(*keys, salt).orderBy("identifierVeldWaarde")
-                capped = (
-                    viol_k.withColumn("__rn", F.row_number().over(w1))
-                    .filter(F.col("__rn") <= limit)
-                    .drop("__rn")
-                )
-            w2 = Window.partitionBy(*keys).orderBy("identifierVeldWaarde")
-            capped = (
-                capped.withColumn("__rn", F.row_number().over(w2))
-                .filter(F.col("__rn") <= limit)
-                .drop("__rn")
+            capped = _capped_per_key(
+                viol_k, keys, F.col("identifierVeldWaarde"), limit, n_rows_hint
             )
             grouped = capped.groupBy(*keys).agg(
                 F.array_sort(F.collect_list("identifierVeldWaarde")).alias("__ids")
@@ -818,32 +775,8 @@ class ValidationEngine:
                 ),
             )
         if settings.violation_limit:
-            from pyspark.sql import Window
-
-            # two-stage exact limit: a single window partitioned only by
-            # regelId would shuffle EVERY violation row to <= #rules
-            # reducers (hot keys at scale). Stage 1 caps each of S salt
-            # buckets per rule at `limit` (balanced shuffle), leaving
-            # <= S*limit rows per rule for the exact stage-2 window.
-            limit = settings.violation_limit
-            n_salt = 16
-            capped = viol
-            if n_rows_hint is None or n_rows_hint > n_salt * limit:
-                salt = F.pmod(
-                    F.xxhash64(F.coalesce(F.col("identifierVeldWaarde"), F.lit(""))),
-                    F.lit(n_salt),
-                )
-                w1 = Window.partitionBy("regelId", salt).orderBy(F.lit(1))
-                capped = (
-                    viol.withColumn("__rn", F.row_number().over(w1))
-                    .filter(F.col("__rn") <= limit)
-                    .drop("__rn")
-                )
-            w2 = Window.partitionBy("regelId").orderBy(F.lit(1))
-            return (
-                capped.withColumn("__rn", F.row_number().over(w2))
-                .filter(F.col("__rn") <= limit)
-                .drop("__rn")
+            return _capped_per_key(
+                viol, ["regelId"], F.lit(1), settings.violation_limit, n_rows_hint
             )
         return viol
 
@@ -861,11 +794,10 @@ class ValidationEngine:
         fused scan: duplicate-key detection via
         ``groupBy(keys).count().filter(>1)`` (map-side partial counts — hot
         keys shuffle one row per input partition, skew-safe; AQE coalesces
-        the reduce side), then — when duplicates exist — the violation frame
-        (key-pruned semi-join back to the input), shaped, persisted and
-        materialized HERE. Building it lazily instead would re-scan the
-        input during downstream afwijking consumption, serializing ~seconds
-        of pruned scans after all parallel work has finished."""
+        the reduce side), then — when duplicates exist — the shaped
+        violation frame: a key-pruned, NULL-safe semi-join back to the
+        input. That frame is built LAZILY (see the note at the end), so its
+        rows are computed when afwijking is consumed."""
         keys = cr.key_cols
         # explicit projection before the shuffle: guarantees only the key
         # columns are scanned/shuffled even when the input is cached or the
@@ -885,10 +817,16 @@ class ValidationEngine:
         if unexpected:
             # violations: rows participating in duplicate groups. The
             # duplicate key set is usually tiny -> broadcast the semi-join.
-            join_side = dup_keys.select(*keys)
+            # NULL-safe: groupBy puts NULL key parts in one group, which the
+            # count above includes, so plain equality would drop those rows.
+            # The key side is renamed because it derives from `df` itself.
+            join_side = dup_keys.select(
+                *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)]
+            )
             if n_groups <= 1_000_000:
                 join_side = F.broadcast(join_side)
-            viol_rows = df.join(join_side, on=keys, how="left_semi")
+            on = [F.col(k).eqNullSafe(F.col(f"__k{i}")) for i, k in enumerate(keys)]
+            viol_rows = df.join(join_side, on=on, how="left_semi")
 
             # deviating value: str(tuple of (col, value) pairs) for compound
             # keys (reference str(tuple(dict.items()))); plain value else.
@@ -953,8 +891,7 @@ class ValidationEngine:
     ):
         """FULL referential work on a pool thread (overlaps the fused scan):
         left-anti join + count, and — when violations exist — the shaped
-        violation frame persisted and materialized here (same rationale as
-        _dup_key_stats).
+        violation frame, built lazily like _dup_key_stats's.
 
         Join strategy is SIZE-GUARDED like the uniqueness path
         (_dup_key_stats): the distinct reference key set is persisted and

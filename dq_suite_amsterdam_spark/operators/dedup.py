@@ -897,7 +897,6 @@ def connected_components(
     persisted_frames: list | None = None,
     stats: dict | None = None,
     algorithm: str = "jump",
-    local_max_edges: int | None = None,
 ) -> DataFrame:
     """(id, component) for every id appearing in ``pairs``; ``component``
     is the smallest id in the vertex's connected component.
@@ -960,8 +959,6 @@ def connected_components(
 
     if algorithm not in ("jump", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r} (jump | star)")
-    if local_max_edges is None:
-        local_max_edges = _CC_LOCAL_MAX_EDGES
     # persist the RAW edge list once: `pairs` is usually an EXPENSIVE plan
     # (LSH banding + signature joins) — without the cache every consumer
     # (edge count, each closure round) would re-run the whole candidate
@@ -972,7 +969,7 @@ def connected_components(
     raw = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).persist()
-    if local_max_edges and raw.count() <= local_max_edges:
+    if raw.count() <= _CC_LOCAL_MAX_EDGES:
         # scale-adaptive fast path: the measured edge set fits the driver
         # comfortably, so the closure — an O(E α(E)) union-find — runs
         # locally in one pass instead of paying several shuffle+checkpoint
@@ -981,15 +978,9 @@ def connected_components(
         # NULL ids fall through to the distributed path.
         # Arrow transfer: a few hundred thousand (src, dst) rows arrive as
         # two columnar buffers instead of per-row JVM->pickle Row objects
-        # (measurably cheaper at the 10^5-10^6-edge end of this path);
-        # falls back to collect() where toArrow is unavailable
-        try:
-            tab = raw.toArrow()
-            edge_rows = list(
-                zip(tab.column(0).to_pylist(), tab.column(1).to_pylist())
-            )
-        except Exception:  # pragma: no cover - non-Arrow environments
-            edge_rows = raw.collect()
+        # (measurably cheaper at the 10^5-10^6-edge end of this path)
+        tab = raw.toArrow()
+        edge_rows = list(zip(tab.column(0).to_pylist(), tab.column(1).to_pylist()))
         comps = _local_components(
             edge_rows, drop_self_loops=(algorithm == "star")
         )

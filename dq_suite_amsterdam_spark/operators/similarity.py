@@ -32,7 +32,7 @@ def _norm(a: Column) -> Column:
     )
 
 
-# -- unrolled (codegen) variants --------------------------------------------
+# -- SQL-fragment builders (unrolled codegen form + HOF fallback) ----------
 #
 # Higher-order functions (aggregate/zip_with) are evaluated INTERPRETED —
 # Catalyst never compiles the lambda body — so a 64-dim dot product costs
@@ -40,48 +40,28 @@ def _norm(a: Column) -> Column:
 # plan time, the same fold unrolls into a flat codegen'd arithmetic chain:
 # 0.0 + a[0]*b[0] + a[1]*b[1] + ... — parsed left-associative, which is
 # EXACTLY the HOF fold order (acc seeded 0.0), so the result is
-# bit-identical; the 0.0 seed is kept for the -0.0 corner. Rows whose
-# array size differs from ``dim`` fall back to the HOF form via a guard
-# (CASE branches evaluate lazily), preserving NULL/short-array semantics.
+# bit-identical to ``_dot``/``_norm``; the 0.0 seed is kept for the -0.0
+# corner. Rows whose array size differs from ``dim`` fall back to the HOF
+# form via a CASE guard (branches evaluate lazily), preserving NULL and
+# short-array semantics. The chain is built as ONE parsed SQL string
+# (~2ms) rather than Column operators (~0.3-0.7s of py4j round-trips per
+# call site). Fragments take column NAMES / SQL fragments, so there is no
+# lossy Column -> SQL conversion anywhere; finite float literals render
+# with Python repr (shortest round-trip) + 'D', which Spark's parser reads
+# back as the exact same double.
 
-
-def _chain_add(seed: Column, terms: list[Column]) -> Column:
-    out = seed
-    for t in terms:
-        out = out + t
-    return out
-
-
-def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    return _chain_add(
-        F.lit(0.0).cast("double"),
-        [F.get(a, i) * F.get(b, i) for i in range(dim)],
-    )
-
-
-def _norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(
-        _chain_add(
-            F.lit(0.0).cast("double"),
-            [F.get(a, i) * F.get(a, i) for i in range(dim)],
-        )
-    )
-
-
-# -- SQL-fragment builders for the unrolled forms ----------------------------
-#
-# Building the 64-dim chains via Column operators costs ~0.3-0.7s of DRIVER
-# time per call site (every operator is an eager py4j round-trip); parsing
-# ONE SQL string with the identical left-associative structure costs ~2ms
-# and yields a bit-identical expression tree (verified get()-vs-expr on
-# packed doubles). Fragments take column NAMES / SQL fragments, so there is
-# no lossy Column -> SQL conversion anywhere; float literals render with
-# Python repr (shortest round-trip) + 'D', which Spark's parser reads back
-# as the exact same double.
+# the parser has no literal for the non-finite doubles; a cast of the
+# string form yields the exact value
+_NON_FINITE_SQL = {
+    "nan": "CAST('NaN' AS DOUBLE)",
+    "inf": "CAST('Infinity' AS DOUBLE)",
+    "-inf": "CAST('-Infinity' AS DOUBLE)",
+}
 
 
 def _float_lit_sql(x: float) -> str:
-    return repr(float(x)) + "D"
+    r = repr(float(x))
+    return _NON_FINITE_SQL.get(r, r + "D")
 
 
 def _array_lit_sql(vals: list[float]) -> str:
@@ -115,10 +95,8 @@ def _norm_hof_frag(a: str) -> str:
 
 def cosine_sql(a: str, b: str, dim: int) -> Column:
     """Guarded unrolled cosine over two SQL fragments (usually column
-    names): same guarded shape as ``cosine_col(..., dim=...)`` — codegen'd
-    unrolled chain when both sizes match ``dim``, interpreted HOF fallback
-    otherwise — built as one parsed expression instead of ~6*dim py4j
-    round-trips. Bit-identical to the Column form."""
+    names): codegen'd unrolled chain when both sizes match ``dim``,
+    interpreted HOF fallback otherwise. Bit-identical to ``cosine_col``."""
     fast = (
         f"({_dot_sql_frag(a, b, dim)}) / "
         f"({_norm_sql_frag(a, dim)} * {_norm_sql_frag(b, dim)})"
@@ -132,15 +110,10 @@ def cosine_sql(a: str, b: str, dim: int) -> Column:
     )
 
 
-def cosine_col(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Cosine similarity; pass ``dim`` when the vector length is known at
-    plan time to run the codegen'd unrolled form (bit-identical — see the
-    unrolled-variant note above) instead of interpreted HOFs."""
-    hof = _dot(a, b) / (_norm(a) * _norm(b))
-    if dim is None:
-        return hof
-    fast = _dot_unrolled(a, b, dim) / (_norm_unrolled(a, dim) * _norm_unrolled(b, dim))
-    return F.when((F.size(a) == dim) & (F.size(b) == dim), fast).otherwise(hof)
+def cosine_col(a: Column, b: Column) -> Column:
+    """Cosine similarity of two Column-typed vectors (interpreted HOFs);
+    callers with named columns and a known dimension use ``cosine_sql``."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def cosine_topk(

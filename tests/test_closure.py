@@ -4,6 +4,7 @@ pairs + drop_near_duplicates representative selection."""
 import pytest
 from pyspark.sql import functions as F
 
+from dq_suite_amsterdam_spark.operators import dedup
 from dq_suite_amsterdam_spark.operators.dedup import (
     connected_components,
     drop_near_duplicates,
@@ -11,7 +12,14 @@ from dq_suite_amsterdam_spark.operators.dedup import (
 )
 
 
-def _components(spark, pairs_rows, cap=50, local_max_edges=None):
+@pytest.fixture
+def distributed_closure(monkeypatch):
+    """No graph fits the driver-local union-find: every closure in the test
+    runs the distributed loop."""
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
+
+
+def _components(spark, pairs_rows, cap=50):
     pairs = spark.createDataFrame(pairs_rows, "id_a long, id_b long")
     frames = []
     try:
@@ -21,7 +29,6 @@ def _components(spark, pairs_rows, cap=50, local_max_edges=None):
                 pairs,
                 max_iterations=cap,
                 persisted_frames=frames,
-                local_max_edges=local_max_edges,
             ).collect()
         }
     finally:
@@ -157,6 +164,7 @@ def test_drop_near_duplicates_keep_best(spark):
         drop_near_duplicates(df, pairs, keep="newest")
 
 
+@pytest.mark.usefixtures("distributed_closure")
 def test_path_graph_10k_depth_bound(spark):
     """Adversarial-depth pin (VERDICT r04 item 7): a 10^4-vertex PATH graph
     — diameter 9,999, the worst case for label propagation — must converge
@@ -171,9 +179,7 @@ def test_path_graph_10k_depth_bound(spark):
     )
     stats = {}
     frames = []
-    comp = connected_components(
-        pairs, persisted_frames=frames, stats=stats, local_max_edges=0
-    )
+    comp = connected_components(pairs, persisted_frames=frames, stats=stats)
     rows = comp.groupBy("component").count().collect()
     assert stats["converged"] and stats["last_changed"] == 0
     assert stats["rounds"] <= math.ceil(math.log2(n - 1)) + 6  # = 20
@@ -183,6 +189,7 @@ def test_path_graph_10k_depth_bound(spark):
         f.unpersist()
 
 
+@pytest.mark.usefixtures("distributed_closure")
 def test_unconverged_closure_warns(spark):
     # exhausting max_iterations must NOT silently return under-merged
     # labels: RuntimeWarning + stats.converged False
@@ -191,9 +198,7 @@ def test_unconverged_closure_warns(spark):
     )
     stats = {}
     with pytest.warns(RuntimeWarning, match="UNDER-MERGED"):
-        connected_components(
-            pairs, max_iterations=2, stats=stats, local_max_edges=0
-        ).count()
+        connected_components(pairs, max_iterations=2, stats=stats).count()
     assert stats["converged"] is False and stats["rounds"] == 2
     assert stats["last_changed"] > 0
 
@@ -316,7 +321,7 @@ def test_dedup_near_duplicates_one_call(spark):
 # -- large-star/small-star variant -------------------------------------------
 
 
-def _star_components(spark, pairs_rows, cap=50, stats=None, local_max_edges=None):
+def _star_components(spark, pairs_rows, cap=50, stats=None):
     pairs = spark.createDataFrame(pairs_rows, "id_a long, id_b long")
     frames = []
     try:
@@ -328,7 +333,6 @@ def _star_components(spark, pairs_rows, cap=50, stats=None, local_max_edges=None
                 persisted_frames=frames,
                 stats=stats,
                 algorithm="star",
-                local_max_edges=local_max_edges,
             ).collect()
         }
     finally:
@@ -349,31 +353,30 @@ def test_star_matches_jump_on_mixed_graph(spark):
     assert _star_components(spark, rows) == _components(spark, rows)
 
 
+@pytest.mark.usefixtures("distributed_closure")
 def test_star_hub_graph_one_round_collapse(spark):
     # a 200-spoke hub: the high-degree regime the star variant targets —
     # large-star collapses the whole neighborhood onto the min immediately
     stats = {}
-    comp = _star_components(
-        spark, [(100, 1000 + i) for i in range(200)], stats=stats,
-        local_max_edges=0,
-    )
+    comp = _star_components(spark, [(100, 1000 + i) for i in range(200)], stats=stats)
     assert set(comp.values()) == {100}
     assert len(comp) == 201
     assert stats["converged"] and stats["rounds"] <= 3
 
 
+@pytest.mark.usefixtures("distributed_closure")
 def test_star_deep_path_logarithmic_rounds(spark):
     # 300-vertex path, diameter 299: star must converge in O(log^2) rounds,
     # far under the 25-round budget (neighbor-min alone would need ~299)
     stats = {}
     comp = _star_components(
-        spark, [(i, i + 1) for i in range(299)], cap=25, stats=stats,
-        local_max_edges=0,
+        spark, [(i, i + 1) for i in range(299)], cap=25, stats=stats
     )
     assert set(comp.values()) == {0} and len(comp) == 300
     assert stats["converged"] and stats["rounds"] <= 20
 
 
+@pytest.mark.usefixtures("distributed_closure")
 def test_star_unconverged_warns(spark):
     import warnings
 
@@ -382,9 +385,7 @@ def test_star_unconverged_warns(spark):
     )
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        connected_components(
-            pairs, max_iterations=1, algorithm="star", local_max_edges=0
-        ).collect()
+        connected_components(pairs, max_iterations=1, algorithm="star").collect()
     assert any("UNDER-MERGED" in str(x.message) for x in w)
 
 
@@ -398,7 +399,7 @@ def test_star_empty_and_bad_algorithm(spark):
 # -- driver-local fast path ---------------------------------------------------
 
 
-def test_local_fast_path_matches_distributed(spark):
+def test_local_fast_path_matches_distributed(spark, monkeypatch):
     import random
 
     random.seed(23)
@@ -408,12 +409,13 @@ def test_local_fast_path_matches_distributed(spark):
     # jump: identical output local vs distributed (incl. self-loop vertices)
     rows_with_self = rows + [(999, 999)]
     local = _components(spark, rows_with_self)
-    dist = _components(spark, rows_with_self, local_max_edges=0)
+    slocal = _star_components(spark, rows_with_self)
+    monkeypatch.setattr(dedup, "_CC_LOCAL_MAX_EDGES", 0)
+    dist = _components(spark, rows_with_self)
     assert local == dist
     assert local[999] == 999  # jump keeps self-loop-only vertices
     # star: identical output local vs distributed (drops self-loop-only)
-    slocal = _star_components(spark, rows_with_self)
-    sdist = _star_components(spark, rows_with_self, local_max_edges=0)
+    sdist = _star_components(spark, rows_with_self)
     assert slocal == sdist
     assert 999 not in slocal
 

@@ -123,6 +123,25 @@ def test_compound_uniqueness_rule(spark, people):
     a = res.afwijking.collect()
     assert len(a) == 2
     assert a[0]["afwijkendeAttribuutWaarde"] == "(('id', 5), ('name', 'eve'))"
+    # a duplicate group whose key holds a NULL counts like any other, and
+    # afwijking lists every row the count includes
+    with_null_key = people.union(
+        spark.createDataFrame(
+            [(7, None, 1, "NL"), (7, None, 2, "BE")],
+            "id int, name string, age int, country string",
+        )
+    )
+    res = run_validation(spark, with_null_key, doc, "tbl")
+    r = by_rule(res, "ExpectCompoundColumnsToBeUnique")
+    assert r.unexpected_count == 4
+    a = res.afwijking.collect()
+    assert len(a) == r.unexpected_count
+    assert sorted(x["afwijkendeAttribuutWaarde"] for x in a) == [
+        "(('id', 5), ('name', 'eve'))",
+        "(('id', 5), ('name', 'eve'))",
+        "(('id', 7), ('name', None))",
+        "(('id', 7), ('name', None))",
+    ]
 
 
 def test_row_count_rules(spark, people):

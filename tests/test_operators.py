@@ -112,10 +112,20 @@ def embeddings(spark):
 
 
 def test_cosine_topk(spark, embeddings):
+    import math
+
     query = embeddings.filter("vec_id = 3").first()["embedding"]
     top = cosine_topk(embeddings, query, k=3).collect()
     assert top[0]["vec_id"] in (3, 100) and top[1]["vec_id"] in (3, 100)
     assert top[0]["cosine"] >= 0.999999
+    # NaN and ±Inf query elements have no SQL literal; they must still
+    # plan (as casts) and run, each cosine then being NaN
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        bad_query = [bad] + list(query[1:])
+        top = cosine_topk(embeddings, bad_query, k=3).collect()
+        assert len(top) == 3
+        assert all(math.isnan(r["cosine"]) for r in top)
+        ann_topk_lsh(embeddings, bad_query, k=3, n_planes=6).collect()
 
 
 def test_ann_lsh_matches_brute_force_top1(spark, embeddings):
